@@ -300,32 +300,45 @@ object JdbcUpsert {
                   case _ => false
                 }) || extraTransient(e) || isConnectionDeath(e)) =>
               attempt += 1
-              val dead = isConnectionDeath(e) ||
-                (try conn.isClosed catch { case _: Exception => true })
-              if (dead) {
-                closeQuietly()
-                // the reconnect itself can fail while the database is
-                // briefly unavailable (failover/restart — the exact
-                // scenario this path targets); spend the remaining retry
-                // budget on it instead of letting the reconnect error
-                // escape with the original failure discarded.
-                var opened = false
-                while (!opened) {
-                  try { open(); opened = true }
-                  catch {
-                    case oe: Throwable if scala.util.control.NonFatal(oe) =>
-                      closeQuietly() // half-open connection from a failed open()
-                      if (attempt >= maxRetries) { oe.addSuppressed(e); throw oe }
-                      attempt += 1
-                      Thread.sleep(50L * attempt)
+              // whatever escapes the recovery (a reconnect out of budget,
+              // a fatal open() error, an interrupted backoff) carries the
+              // batch failure it was recovering from
+              try {
+                val dead = isConnectionDeath(e) ||
+                  (try conn.isClosed catch { case _: Exception => true })
+                var slept = false
+                if (dead) {
+                  closeQuietly()
+                  // the reconnect itself can fail while the database is
+                  // briefly unavailable (failover/restart — the exact
+                  // scenario this path targets); spend the remaining retry
+                  // budget on it instead of letting the reconnect error
+                  // escape on the first try.
+                  var opened = false
+                  while (!opened) {
+                    try { open(); opened = true }
+                    catch {
+                      case oe: Throwable =>
+                        closeQuietly() // half-open connection from a failed open()
+                        if (!scala.util.control.NonFatal(oe) || attempt >= maxRetries) throw oe
+                        attempt += 1
+                        Thread.sleep(50L * attempt)
+                        slept = true
+                    }
                   }
                 }
+                else {
+                  try conn.rollback() catch { case _: java.sql.SQLException => () }
+                  st.clearBatch()
+                }
+                // linear backoff: victims re-collide less; a reopen that
+                // already backed off has waited its turn
+                if (!slept) Thread.sleep(50L * attempt)
+              } catch {
+                case t: Throwable =>
+                  if (t ne e) t.addSuppressed(e)
+                  throw t
               }
-              else {
-                try conn.rollback() catch { case _: java.sql.SQLException => () }
-                st.clearBatch()
-              }
-              Thread.sleep(50L * attempt) // linear backoff: victims re-collide less
           }
         }
       }

@@ -20,10 +20,12 @@ import org.apache.spark.sql.functions._
   * and re-reads them (:196-201,220-224 — its IR between worker
   * processes), here each branch is ONE logical plan: mapping projection
   * and enrichment fuse into the scan under whole-stage codegen, and the
-  * only materialization is the sink write. The two branches run as
-  * concurrent Spark jobs on a shared cached input; the barrier is
-  * Await.all; cleanup (unpersist) replaces the reference's temp-file GC
-  * task (:350-373).
+  * only materialization is the sink write. Each entity has its own
+  * input frame, so the branches run as concurrent Spark jobs that share
+  * nothing and cache nothing: each branch reads its input exactly once,
+  * in its write job. The barrier is `Dag.run` awaiting every branch,
+  * and with no temp files there is no counterpart to the reference's
+  * temp-file GC task (:350-373).
   */
 object PipelineRunner {
 
@@ -60,15 +62,11 @@ object PipelineRunner {
       // the failure alert hook (Dag.scala)
       val nodes = entities.map { case (entity, raw) =>
         entity -> (() => {
-          val cached = raw.cache()
-          try {
-            val mapped = spec.mappings.get(entity).fold(cached)(m => MappingCompiler.transform(cached, m))
-            val enriched = spec.enrichments.getOrElse(entity, identity[DataFrame] _)(mapped)
-            enriched
-              .observe(StatsListener.observeName(spec.runId, entity), count(lit(1)).as("rows"))
-              .write.mode("overwrite").parquet(s"${spec.sinkDir}/$entity")
-          } finally cached.unpersist()
-          ()
+          val mapped = spec.mappings.get(entity).fold(raw)(m => MappingCompiler.transform(raw, m))
+          val enriched = spec.enrichments.getOrElse(entity, identity[DataFrame] _)(mapped)
+          enriched
+            .observe(StatsListener.observeName(spec.runId, entity), count(lit(1)).as("rows"))
+            .write.mode("overwrite").parquet(s"${spec.sinkDir}/$entity")
         })
       }
       val result = Dag.run(Dag.Spec(
@@ -81,9 +79,7 @@ object PipelineRunner {
       }
       // QueryExecutionListener callbacks are async; wait (bounded) until
       // every entity branch has reported its stats row
-      val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (entities.keys.exists(e => !listener.snapshot.exists(_.step == e)) &&
-        System.nanoTime() < deadline) Thread.sleep(20)
+      listener.awaitSteps(entities.keySet, 30.seconds)
       listener.snapshot
     } finally spark.listenerManager.unregister(listener)
   }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import scala.concurrent.duration.FiniteDuration
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -69,7 +70,7 @@ final class StatsListener(runId: String, alertSink: AlertSink = new LogAlertSink
       case (name, row) if name.startsWith(ObservePrefix) && row.schema.fieldNames.contains("rows") =>
         (name.stripPrefix(ObservePrefix), row.getAs[Long]("rows"))
     }.foreach { case (step, rows) =>
-      stats.add(StepStat(runId, step, "COMPLETED", durationNs / 1000000L, Some(rows)))
+      record(StepStat(runId, step, "COMPLETED", durationNs / 1000000L, Some(rows)))
     }
   }
 
@@ -85,8 +86,26 @@ final class StatsListener(runId: String, alertSink: AlertSink = new LogAlertSink
         if c.name.startsWith(ObservePrefix) => c.name.stripPrefix(ObservePrefix)
     }).toOption.flatten
     step.foreach { s =>
-      stats.add(StepStat(runId, s, "FAILED", 0L, None))
+      record(StepStat(runId, s, "FAILED", 0L, None))
       alertSink.alert(runId, s, exception.getMessage)
+    }
+  }
+
+  private def record(stat: StepStat): Unit = synchronized {
+    stats.add(stat)
+    notifyAll()
+  }
+
+  /** Block until every one of `steps` has a stats row, or `timeout`
+    * passes. Listener callbacks arrive on Spark's listener bus after the
+    * action has returned; each recorded row wakes the waiter.
+    */
+  def awaitSteps(steps: Set[String], timeout: FiniteDuration): Unit = synchronized {
+    val deadline = System.nanoTime() + timeout.toNanos
+    var left = timeout.toNanos
+    while (left > 0 && !steps.forall(s => stats.asScala.exists(_.step == s))) {
+      TimeUnit.NANOSECONDS.timedWait(this, left)
+      left = deadline - System.nanoTime()
     }
   }
 

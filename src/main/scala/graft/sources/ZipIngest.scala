@@ -6,8 +6,12 @@ import java.util.zip.ZipInputStream
 
 import scala.collection.mutable
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, GraftJsonBridge, JSONOptions, JsonInferSchema}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Zip-archive ingest: one input file = a zip holding `metadata.json`
   * plus one JSON-lines member per entity — the file shape the reference
@@ -18,11 +22,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The zip member extraction is inherently a single stream, exactly as
   * in the reference — it happens once on the driver per (small) control
-  * file. Payload rows immediately become distributed DataFrames
-  * (`spark.createDataset(lines)` + `spark.read.json`); at 100 TB the
-  * payload would land unzipped on object storage and be read with
-  * `spark.read.json(path)` directly — this reader is the control-plane
-  * path, not the bulk path.
+  * file. Payload rows immediately become distributed DataFrames; at
+  * 100 TB the payload would land unzipped on object storage and be read
+  * with `spark.read.json(path)` directly — this reader is the
+  * control-plane path, not the bulk path.
+  *
+  * Each entity frame is what `spark.read.json(spark.createDataset(lines))`
+  * gives (same schema, same rows; `ZipIngestSpec` holds the two equal),
+  * without its per-file Spark floor:
+  *  - Partitions: one per `spark.sql.files.maxPartitionBytes` of
+  *    member text (characters, newlines included), the bound a file scan
+  *    puts on a split. A small member is one partition, so its write is
+  *    one task and lands as one part file; a local Dataset would be cut
+  *    into `defaultParallelism` slices whatever its size.
+  *  - Schema: inferred on the driver from the lines already in
+  *    memory, with Spark's own JSON inference (`inferField` per line,
+  *    merged by `compatibleRootType`, then `canonicalizeType`) under the
+  *    session's conf and the reader's default options, PERMISSIVE mode
+  *    included: a line Jackson cannot parse infers as the
+  *    `spark.sql.columnNameOfCorruptRecord` column. The read then takes
+  *    that schema, so building the frame submits no Spark job; Spark's
+  *    inference would have run one per entity.
   */
 object ZipIngest {
 
@@ -50,12 +70,43 @@ object ZipIngest {
     } finally zin.close()
 
     val metadata = members.get("metadata.json").map(ls => parseMetadata(ls.mkString("\n"))).getOrElse(Map.empty)
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     val entities = (members - "metadata.json").map { case (name, lines) =>
-      import spark.implicits._
-      val entity = name.stripSuffix(".json")
-      entity -> spark.read.json(spark.createDataset(lines))
+      val chars = lines.iterator.map(_.length + 1L).sum
+      val parts = math.max(1L, (chars + maxBytes - 1) / maxBytes).toInt
+      val ds = spark.createDataset(spark.sparkContext.parallelize(lines, parts))(Encoders.STRING)
+      name.stripSuffix(".json") -> spark.read.schema(inferSchema(spark, lines)).json(ds)
     }.toMap
     ZipPayload(metadata, entities)
+  }
+
+  /** The schema `spark.read.json` infers for `lines`, computed on the
+    * driver: `JsonInferSchema.infer` without the Spark job (one
+    * partition, so its per-partition reduce and cross-partition fold
+    * collapse into one fold from the empty struct).
+    */
+  private def inferSchema(spark: SparkSession, lines: Seq[String]): StructType = {
+    val conf = spark.sessionState.conf
+    val options = new JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    SQLConf.withExistingConf(conf) {
+      val inference = new JsonInferSchema(options)
+      val merge = JsonInferSchema.compatibleRootType(options.columnNameOfCorruptRecord, options.parseMode)
+      val corrupt = StructType(Seq(StructField(options.columnNameOfCorruptRecord, StringType)))
+      val factory = options.buildJsonFactory()
+      val root = lines.iterator.map { line =>
+        try scala.util.Using.resource(CreateJacksonParser.string(factory, line)) { parser =>
+          parser.nextToken()
+          inference.inferField(parser)
+        } catch {
+          // the errors JsonInferSchema hands to the parse mode for a
+          // Dataset source; PERMISSIVE keeps the line as a corrupt record
+          case _: RuntimeException | _: JsonProcessingException => corrupt
+        }
+      }.foldLeft(StructType(Nil): DataType)(merge)
+      // canonicalizeType erases every empty struct, the root one included
+      GraftJsonBridge.canonicalizeType(inference, root, options)
+        .collect { case s: StructType => s }.getOrElse(StructType(Nil))
+    }
   }
 
   /** metadata.json -> flat string map (workflow_system_name, company_id,

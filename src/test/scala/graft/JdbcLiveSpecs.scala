@@ -289,6 +289,29 @@ class JdbcLiveSpecs extends SparkSpec {
     assert(opened.get() === 2, "exactly one reconnect expected")
     assert(readAll(url, "SELECT k, v FROM cd ORDER BY k") ===
       (1L to 5L).map(i => Seq(i, s"v$i")))
+    // the database stays down: every reopen fails. The reconnect spends
+    // the retry budget, then the reopen error escapes carrying the batch
+    // failure it was recovering from — for a fatal open() error too
+    def reopenFails(down: () => Throwable): (Throwable, Int) = {
+      deaths.set(1)
+      val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+      def connectDown(): java.sql.Connection =
+        if (calls.getAndIncrement() == 0) dyingConn(java.sql.DriverManager.getConnection(url))
+        else throw down()
+      val thrown = intercept[Throwable] {
+        JdbcUpsert.writePartition(connectDown _, sql, ords,
+          Seq(Row(9L, "x")).iterator, batchSize = 2, maxRetries = 3)
+      }
+      (thrown, calls.get())
+    }
+    val (outOfBudget, opens) = reopenFails(() => new java.sql.SQLNonTransientConnectionException("refused", "08001"))
+    assert(outOfBudget.getMessage === "refused")
+    assert(opens === 4, "the first open plus one reopen per remaining retry")
+    assert(outOfBudget.getSuppressed.toSeq.map(_.getMessage) === Seq("No current connection."),
+      "the original batch failure must ride along")
+    val (fatal, fatalOpens) = reopenFails(() => new LinkageError("fatal open"))
+    assert(fatal.isInstanceOf[LinkageError] && fatalOpens === 2, "a fatal open() error is never retried")
+    assert(fatal.getSuppressed.toSeq.map(_.getMessage) === Seq("No current connection."))
     // classifier sanity: 08xxx chains match, unrelated states don't
     assert(JdbcUpsert.isConnectionDeath(
       new java.sql.SQLException("boom", "08006")))

@@ -4,9 +4,88 @@ import graft.operators.FieldMapping
 import graft.pipeline._
 import graft.pipeline.PipelineRunner.PipelineSpec
 import graft.sources.ZipIngest
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 class ZipIngestSpec extends SparkSpec {
+
+  /** Each member of a zip read by `ZipIngest.read` against Spark's own
+    * `spark.read.json(spark.createDataset(lines))`: same schema, same rows.
+    */
+  private def assertSparkEquivalent(members: Seq[(String, Seq[String])]): Unit = {
+    import spark.implicits._
+    val zip = tmpDir("zipequiv").resolve("in.zip")
+    Fixtures.writeZip(zip, members.map { case (name, lines) => s"$name.json" -> lines.mkString("\n") })
+    val got = ZipIngest.read(spark, zip.toString).entities
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+    members.foreach { case (name, lines) =>
+      val want = spark.read.json(spark.createDataset(lines))
+      assert(got(name).schema === want.schema, s"$name: ${lines.mkString(" ⏎ ")}")
+      assert(rows(got(name)) === rows(want), s"$name: ${lines.mkString(" ⏎ ")}")
+    }
+  }
+
+  test("driver-side inference matches spark.read.json: ext-JSON, widening, nulls, arrays, corrupt and blank lines") {
+    assertSparkEquivalent(Seq(
+      "extjson" -> Seq(
+        """{"_id": {"$oid": "5f1"}, "at": {"$date": 1600000000000}, "amt": {"$numberDecimal": "9.99"}}""",
+        """{"_id": {"$oid": "5f2"}, "at": {"$date": "2020-09-13T12:26:40Z"}, "amt": {"$numberDecimal": "-0.5"}}"""),
+      "widening" -> Seq(
+        """{"v": 1, "n": 7, "s": "x"}""",
+        """{"v": 2.5, "n": 12345678901234, "s": 3}""",
+        """{"v": "text", "n": 123456789012345678901234567890}"""),
+      "nulls" -> Seq(
+        """{"gone": null, "k": 1}""",
+        """{}""",
+        """{"gone": null, "xs": [{"a": 1}, {"a": 2, "b": "y"}], "e": {}}""",
+        """{"xs": [], "ys": [null]}"""),
+      "corrupt" -> Seq(
+        """{"a": 1}""",
+        """{"a": """,
+        "",
+        "   ",
+        """[{"a": 2}, {"a": 3}]""",
+        "17",
+        """{"a": 4}"""),
+      "empty" -> Seq.empty,
+    ))
+  }
+
+  test("property: driver-side inference matches spark.read.json on generated JSON lines") {
+    val scalar: Gen[String] = Gen.oneOf(
+      Gen.choose(-1000L, 1000L).map(_.toString),
+      Gen.choose(Long.MinValue / 2, Long.MaxValue / 2).map(_.toString),
+      Gen.const("123456789012345678901234567890"),
+      Gen.choose(-1e6, 1e6).map(_.toString),
+      Gen.listOfN(3, Gen.alphaLowerChar).map(cs => "\"" + cs.mkString + "\""),
+      Gen.oneOf("true", "false", "null", "\"\""),
+      Gen.const("""{"$oid": "5f1a"}"""),
+      Gen.choose(0L, 2000000000000L).map(ms => s"""{"$$date": $ms}"""),
+      Gen.choose(0, 99999).map(c => s"""{"$$numberDecimal": "${c / 100}.${c % 100}"}"""))
+    val keys = Gen.oneOf("a", "b", "c", "d")
+    def value(depth: Int): Gen[String] =
+      if (depth == 0) scalar
+      else Gen.frequency(
+        6 -> scalar,
+        1 -> Gen.choose(0, 3).flatMap(Gen.listOfN(_, value(depth - 1))).map(_.mkString("[", ", ", "]")),
+        1 -> obj(depth - 1))
+    def obj(depth: Int): Gen[String] = for {
+      n <- Gen.choose(0, 4)
+      ks <- Gen.listOfN(n, keys)
+      vs <- Gen.listOfN(n, value(depth))
+    } yield ks.distinct.zip(vs).map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
+    val line = Gen.frequency(
+      12 -> obj(2),
+      1 -> Gen.oneOf("", "{\"a\": ", "not json", "[{\"a\": 1}]", "42"))
+    val member = Gen.choose(0, 8).flatMap(Gen.listOfN(_, line))
+    (0 until 20).foreach { i =>
+      Gen.listOfN(2, member).apply(Gen.Parameters.default, Seed(i.toLong)).foreach { ms =>
+        assertSparkEquivalent(ms.zipWithIndex.map { case (lines, j) => s"e$j" -> lines })
+      }
+    }
+  }
 
   test("zip fixture: metadata + per-entity json-lines members") {
     val dir = tmpDir("zipingest")
@@ -83,6 +162,38 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(byStep("contact").exists(_.rows.contains(2L)))
     assert(byStep("transaction").exists(_.rows.contains(3L)))
     assert(alerts.alerts.isEmpty)
+  }
+
+  test("per-file Spark floor: decoding submits no job; a two-entity run is two one-task jobs, one part file per sink") {
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("pipelinefloor")
+    val zip = dir.resolve("input.zip")
+    val sink = dir.resolve("sink")
+    Fixtures.writeZip(zip, Seq(
+      "metadata.json" -> """{"workflow_system_name": "crm"}""",
+      "contact.json" -> (1 to 30).map(i => s"""{"cid": "c$i", "name": "n$i"}""").mkString("\n"),
+      "transaction.json" -> (1 to 40).map(i => s"""{"tid": $i, "amount": $i.5}""").mkString("\n"),
+    ))
+    val decodeJobs = PipelineSpecs.jobsDuring(spark) {
+      ZipIngest.read(spark, zip.toString).entities.values.foreach(_.schema)
+    }
+    assert(decodeJobs.isEmpty, s"decoding submitted jobs: $decodeJobs")
+    val spec = PipelineSpec(
+      runId = "run_floor",
+      mappings = Map(
+        "contact" -> Seq(FieldMapping("cid", "contact_id")),
+        "transaction" -> Seq(FieldMapping("tid", "txn_id"), FieldMapping("amount", "amount"))),
+      sinkDir = sink.toString)
+    val runJobs = PipelineSpecs.jobsDuring(spark) {
+      PipelineRunner.runFromZip(spark, zip.toString, spec)
+    }
+    assert(runJobs.map(_._2) === Seq(1, 1), s"jobs (description, tasks): $runJobs")
+    Seq("contact" -> 30L, "transaction" -> 40L).foreach { case (entity, n) =>
+      val parts = java.nio.file.Files.list(sink.resolve(entity)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
+      assert(parts.size === 1, s"$entity: $parts")
+      assert(spark.read.parquet(sink.resolve(entity).toString).count() === n)
+    }
   }
 
   test("failing branch raises after the barrier and the alert sink fires (dag_utils TODO)") {
@@ -238,5 +349,41 @@ class PipelineRunnerSpec extends SparkSpec {
       assert(v2.select("k", "__state", "d_name").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet === gotView)
     } finally spark.conf.unset(capKey)
+  }
+}
+
+object PipelineSpecs {
+  import scala.jdk.CollectionConverters._
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import org.apache.spark.sql.SparkSession
+
+  /** The jobs `body` submits, as (description, task count). Job starts
+    * reach listeners in submission order, so a marker job run after
+    * `body` returns flushes every job it submitted, from any thread.
+    */
+  def jobsDuring(spark: SparkSession)(body: => Any): Seq[(String, Int)] = {
+    val sc = spark.sparkContext
+    val marker = s"jobsDuring-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        seen.add((props.map(_.getProperty("spark.jobGroup.id")).orNull,
+          props.map(_.getProperty("spark.job.description")).orNull, j.stageInfos.map(_.numTasks).sum))
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "flush", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._1 == marker)) {
+        if (System.nanoTime() > deadline) throw new AssertionError("the marker job never reached the listener")
+        Thread.sleep(10)
+      }
+      seen.asScala.toSeq.takeWhile(_._1 != marker).map(j => (j._2, j._3))
+    } finally sc.removeSparkListener(listener)
   }
 }
